@@ -4,9 +4,9 @@ Corpora come from ``lucene_spark.fixtures.generate_webtext``; the query set
 is the 24 ``reference_queries()`` shapes with each term moved to another
 term of the same hot/mid/rare df band. Expected answers come from the
 brute-force ``PyIndex`` oracle and are cached on disk, keyed by the seed,
-the sizes, the engine's docid assignment and the oracle's own sources.
-Everything here runs in worker processes, before the Spark session starts or
-between set-up and warm-up, never beside a measured phase.
+the sizes, the documents, the queries and the oracle's own sources.
+Everything here runs in worker processes, before or while the Spark session
+starts, never beside a measured phase.
 """
 
 from __future__ import annotations
@@ -49,12 +49,23 @@ def generate(pool: ProcessPoolExecutor, seed: int, sizes: list[int]) -> list[lis
     return list(pool.map(_gen, jobs))
 
 
-def query_set(seed: int, variants: int) -> list[tuple[str, str, str]]:
+def rare_terms_in(docs: list[tuple[str, str]]) -> list[int]:
+    """The rare-band term numbers (8000..9999) that occur in ``docs``."""
+    present = set()
+    for _, text in docs:
+        present.update(int(n) for n in re.findall(r"\bw(\d{4})\b", text) if int(n) >= 8000)
+    return sorted(present)
+
+
+def query_set(seed: int, variants: int, rare: list[int] | None = None) -> list[tuple[str, str, str]]:
     """(query_id, shape class, query string): every reference shape times
-    ``variants`` term variants. The seed picks each variant's band offsets."""
+    ``variants`` term variants. The seed picks each variant's band offsets.
+    ``rare`` limits the rare band to those term numbers, so that a variant
+    never moves a rare term to one the corpus lacks."""
     from lucene_spark.fixtures import reference_queries
 
     offsets = np.random.default_rng(chunk_seed(seed, 999_983)).integers(0, 10**6, size=variants)
+    rare = rare or list(range(8000, 10000))
 
     def remap(m: "re.Match[str]", r: int) -> str:
         n = int(m.group(1))
@@ -62,7 +73,8 @@ def query_set(seed: int, variants: int) -> list[tuple[str, str, str]]:
             return f"w{(n + r) % 10:04d}"
         if n < 8000:  # mid band w0100..w0999
             return f"w{100 + (n - 100 + 37 * r) % 900:04d}"
-        return f"w{8000 + (n - 8000 + 211 * r) % 2000:04d}"  # rare band
+        # rare band: the term's place in the band, scaled onto ``rare``
+        return f"w{rare[((n - 8000) * len(rare) // 2000 + 211 * r) % len(rare)]:04d}"
 
     out = []
     for v, r in enumerate(offsets.tolist()):
@@ -96,14 +108,19 @@ def _term_stats(docs: list[tuple[int, str]]) -> dict[str, list[int]]:
 
 
 def _answers(args) -> dict[str, list[list[float]]]:
+    """Per query, the top ``k`` hits and every hit tied with the k-th one,
+    so the top k can be re-ranked on other docids."""
     from lucene_spark.search.query import parse_query
 
     docs, queries, k = args
     idx = _pyindex(docs)
-    return {
-        qid: [[int(d), float(s)] for d, s in idx.search_query(parse_query(qs, _analyzer), k=k)]
-        for qid, qs in queries
-    }
+    out = {}
+    for qid, qs in queries:
+        hits = idx.search_query(parse_query(qs, _analyzer), k=len(docs))
+        if len(hits) > k:
+            hits = [h for h in hits if h[1] >= hits[k - 1][1]]
+        out[qid] = [[int(d), float(s)] for d, s in hits]
+    return out
 
 
 def _sources_digest() -> str:
@@ -148,17 +165,21 @@ class Oracle:
             lambda: list(self.pool.map(_term_stats, docs)),
         )
 
-    def answers(self, key: dict, docs: list[tuple[int, str]], queries: list[tuple[str, str]], k: int):
-        """query_id -> [[docid, score], ...], top ``k`` by (score desc, docid asc)."""
-        digest = hashlib.sha256(json.dumps(docs).encode()).hexdigest()
+    def answers(self, key: dict, docs: list[tuple[str, str]], queries: list[tuple[str, str]], k: int):
+        """query_id -> [[url, score], ...]: the top ``k`` by score and every
+        hit tied with the k-th, whatever docids the engine gives the docs."""
+        digest = hashlib.sha256(json.dumps([docs, queries]).encode()).hexdigest()
 
         def compute():
             # each distinct query string is evaluated once
             distinct = sorted({qs for _, qs in queries})
             shares = [[(q, q) for q in distinct[i :: self.nproc]] for i in range(self.nproc)]
+            texts = [(i, text) for i, (_, text) in enumerate(docs)]
             by_string: dict = {}
-            for part in self.pool.map(_answers, [(docs, s, k) for s in shares if s]):
+            for part in self.pool.map(_answers, [(texts, s, k) for s in shares if s]):
                 by_string.update(part)
-            return {qid: by_string[qs] for qid, qs in queries}
+            return {
+                qid: [[docs[d][0], score] for d, score in by_string[qs]] for qid, qs in queries
+            }
 
         return self._cached({"kind": "answers", "docs": digest, "k": k, **key}, compute)

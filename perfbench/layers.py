@@ -4,8 +4,9 @@ A layer's figures come from the spans the workload itself recorded around
 its calls into that layer: first from the traced timed loop, else from the
 traced set-up. Layers the workload never calls are measured by ``probe``,
 which closes every traced run: in-process analysis, codec and parser
-passes over a fixed sample, and a tiny tier taken through build, merge,
-search, deletes and compaction. Its own outputs are checked too.
+passes over a fixed sample, an in-process replay of one slice of a tier
+through the segment evaluator, and a tiny tier taken through search,
+deletes and compaction. Its own outputs are checked too.
 """
 
 from __future__ import annotations
@@ -35,6 +36,8 @@ def _analysis_and_codecs(tracer: Tracer, texts: list[str]) -> None:
         with tracer.span("analysis.analyze_batch", jobs=False) as s:
             bt = analyze_batch(texts, stopwords=STOP)
         s["tokens"] = int(bt.codes.size)
+    # the codecs run once per term; a quarter of the sample keeps that short
+    bt = analyze_batch(texts[: len(texts) // 4], stopwords=STOP)
 
     order = np.lexsort((bt.positions, bt.docids, bt.codes))
     codes, docids, positions = bt.codes[order], bt.docids[order], bt.positions[order]
@@ -82,14 +85,71 @@ def _parse(tracer: Tracer) -> None:
             parse_query(qs, lambda t: analyze(t, stopwords=STOP))
 
 
-def probe(spark, tracer: Tracer, work: str, nproc: int, res, tiny_docs: int) -> None:
+def _segment_replay(spark, tracer: Tracer, path: str, res) -> None:
+    """In-process replay of the largest (segment, slice) of a tier through
+    the evaluator the Spark tasks run: context build, the batch evaluator,
+    and the per-query evaluator with block-max pruning on and off."""
+    from pyspark.sql import functions as F
+
+    from lucene_spark.search import Searcher
+    from lucene_spark.search.query import collect_terms
+    from lucene_spark.search.searcher import _slice_bounds
+    from lucene_spark.search.segment import (
+        SegmentContext,
+        batch_search_segment,
+        search_segment,
+    )
+
+    # the searcher's own planning helpers give the inputs a Spark task gets
+    searcher = Searcher(spark, path, stopwords=STOP)
+    queries = query_set(PROBE_SEED, 8)
+    parsed = {qid: searcher._prepared(qs) for qid, _, qs in queries}
+    terms = sorted(set().union(*(collect_terms(q) for q in parsed.values())))
+    scorers = searcher._make_scorers(list(parsed.values()))
+    span = searcher._slice_span()
+    blocks = searcher._postings_blocks(terms, True, span)
+    top = blocks.groupBy("segment_id", "slice_id").count().orderBy(F.desc("count")).first()
+    pdf = blocks.filter(
+        (F.col("segment_id") == top["segment_id"]) & (F.col("slice_id") == top["slice_id"])
+    ).toPandas()
+    base, lo, hi = _slice_bounds(pdf, searcher._seg_meta(), span)
+
+    def context(prune: bool = True):
+        return SegmentContext.from_pdf(pdf, scorers, lo, hi, prune, doc_base=base)
+
+    for _ in range(3):
+        with tracer.span("search.segment.context", jobs=False) as s:
+            ctx = context()
+        s["blocks"] = len(pdf)
+        with tracer.span("search.segment.batch_eval", jobs=False) as s:
+            batch_search_segment(ctx, parsed, 10)
+        s["queries"] = len(parsed)
+    # per-query evaluator on fresh contexts, pruned and exhaustive
+    by_cls: dict[str, list] = {}
+    for qid, cls, _ in queries:
+        by_cls.setdefault(cls, []).append(qid)
+    same = True
+    for cls, qids in by_cls.items():
+        hits = {}
+        for prune in (True, False):
+            ctx = context(prune)
+            with tracer.span("search.segment.eval", jobs=False, cls=cls, prune=prune) as s:
+                hits[prune] = [search_segment(ctx, parsed[q], 10) for q in qids]
+            s["queries"] = len(qids)
+        same &= all(
+            np.array_equal(a[0], b[0]) and np.array_equal(a[1], b[1])
+            for a, b in zip(hits[True], hits[False])
+        )
+    res.check(same, "segment replay: pruned and exhaustive top-k differ")
+
+
+def probe(spark, tracer: Tracer, work: str, res, tiny_docs: int) -> None:
     """Exercise every layer once on fixed inputs; check what it returns."""
     from lucene_spark.analysis.tokenizer import analyze
     from lucene_spark.fixtures import generate_webtext
     from lucene_spark.index import IndexReader, build_index, compact_deletes
     from lucene_spark.index.deletes import add_deletes_by_url
     from lucene_spark.index.invariants import check_index
-    from lucene_spark.index.merge import merge_segments
     from lucene_spark.search import Searcher
 
     tracer.phase = "probe"
@@ -97,15 +157,18 @@ def probe(spark, tracer: Tracer, work: str, nproc: int, res, tiny_docs: int) -> 
     _analysis_and_codecs(tracer, [r["text"] for r in sample])
     _parse(tracer)
 
+    replay = f"{work}/probe-replay"
+    build_index(
+        spark, spark.createDataFrame([(r["url"], r["text"]) for r in sample], "url string, text string"),
+        replay, num_segments=2, stopwords=STOP,
+    )
+    _segment_replay(spark, tracer, replay, res)
+
     rows = [(r["url"], r["text"]) for r in sample[:tiny_docs]]
     df = spark.createDataFrame(rows, "url string, text string")
-    seg, tier = f"{work}/probe-segments", f"{work}/probe-tier"
-    with tracer.span("index.builder") as s:
-        build_index(spark, df, seg, num_segments=2 * nproc, stopwords=STOP)
-    s["bytes_written"] = dir_bytes(seg)
-    with tracer.span("index.merge") as s:
-        merge_segments(spark, seg, tier, target_segments=2)
-    s["bytes_written"] = dir_bytes(tier)
+    # builder and merge spans come from the workload itself
+    tier = f"{work}/probe-tier"
+    build_index(spark, df, tier, num_segments=2, stopwords=STOP)
     with tracer.span("index.reader.open"):
         searcher = Searcher(spark, tier, stopwords=STOP)
     queries = query_set(PROBE_SEED, 1)
@@ -208,6 +271,21 @@ def layer_metrics(tracer: Tracer, nproc: int, overhead_pct: float) -> dict[str, 
     for cls in SHAPE_CLASSES:
         ops = _pick(tracer, "search.single", cls=cls)
         m[f"search.searcher.p50_ms.{cls}"] = (1000 * median(s["wall_s"] for s in ops), "ms")
+
+    ctx = tracer.named("search.segment.context")
+    m["search.segment.context_ms"] = (1000 * median(s["wall_s"] for s in ctx), "ms")
+    m["search.segment.blocks_in_scope"] = (ctx[0]["blocks"], "count")
+    m["search.segment.batch_eval_us_per_query"] = (
+        1e6 * median(s["wall_s"] / s["queries"] for s in tracer.named("search.segment.batch_eval")),
+        "us",
+    )
+    pruned = exhaustive = 0.0
+    for cls in SHAPE_CLASSES:
+        (p,) = tracer.named("search.segment.eval", cls=cls, prune=True)
+        (x,) = tracer.named("search.segment.eval", cls=cls, prune=False)
+        m[f"search.segment.eval_ms.{cls}"] = (1000 * p["wall_s"] / p["queries"], "ms")
+        pruned, exhaustive = pruned + p["wall_s"], exhaustive + x["wall_s"]
+    m["search.segment.prune_speedup"] = (exhaustive / pruned, "ratio")
 
     ops = [s for s in tracer.spans if s.get("phase") == "loop" and s["name"] in
            ("ingest.op", "search.single", "search.batch")]

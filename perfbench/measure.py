@@ -58,7 +58,7 @@ class RssSampler:
     Python workers), sampled every ``interval`` seconds while active. The
     benchmark's own helper processes are passed in ``exclude``."""
 
-    def __init__(self, exclude=(), interval: float = 0.1):
+    def __init__(self, exclude=(), interval: float = 1.0):
         self.exclude = frozenset(exclude)
         self.interval = interval
         self.peak = 0

@@ -1,27 +1,31 @@
-"""The two workloads. Each runs as a closed loop with one caller.
+"""The two workloads. Each runs as a closed loop with one caller and a fixed
+number of ops, so every run does the same work whatever the program's speed.
 
 ``ingest``: each op builds a fresh batch into 2*nproc segments with
 positions, then merges it to a 2-segment tier. Each op's tier is checked
-against the oracle before the next op starts.
+against the oracle before the next op starts. The first op is the cold one
+and is not timed; ``setup_s`` is the median of it and the first timed op.
 
-``search``: one 2-segment index. The loop alternates 12 single
-``Searcher.search(q, k=10).collect()`` calls that walk the 24 shapes round
-robin with one batched ``Searcher.search_many`` call over every shape and
-variant. It ends on a whole round of shapes. Its answers are checked against
-the oracle after the loop has ended.
+``search``: one tier built and merged the same way. The loop alternates 2
+single ``Searcher.search(q, k=10).collect()`` calls, which walk every third
+one of the 24 shapes, with one batched ``Searcher.search_many`` call over
+every shape and variant. Its answers are checked against the oracle after the loop has
+ended.
 """
 
 from __future__ import annotations
 
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from lucene_spark.constants import ENGLISH_STOP_WORDS as STOP
 
-from corpus import SHAPE_CLASSES, Oracle, generate, query_set
+from corpus import SHAPE_CLASSES, Oracle, generate, query_set, rare_terms_in
 from measure import RssSampler, Tracer, dir_bytes, median
 
 K = 10
+SETUP_REPS = 2  # search: the first one is the cold one
 
 
 class Result:
@@ -45,6 +49,19 @@ class Result:
                 self.errors.append(what)
 
 
+def in_background(fn, *args):
+    """Future of ``(fn(*args), seconds it took)``, computed in a thread."""
+    def timed():
+        t = time.perf_counter()
+        value = fn(*args)
+        return value, time.perf_counter() - t
+
+    ex = ThreadPoolExecutor(max_workers=1)
+    fut = ex.submit(timed)
+    ex.shutdown(wait=False)
+    return fut
+
+
 def _docs_df(spark, rows):
     return spark.createDataFrame(rows, "url string, text string")
 
@@ -56,17 +73,16 @@ class Ingest:
         self.cfg, self.spark, self.tracer, self.oracle, self.pool = cfg, spark, tracer, oracle, pool
 
     def prepare(self, seed: int) -> None:
-        """Corpus and oracle: before the session, outside every timed phase."""
+        """Corpus before the session; the oracle runs while the session
+        starts, outside every timed phase."""
         c = self.cfg
         t = time.perf_counter()
-        sizes = [c.setup_docs] * c.setup_reps + [c.ingest_docs] * c.ingest_batches
+        sizes = [c.ingest_docs] * (1 + c.ingest_ops)
         self.batches = generate(self.pool, seed, sizes)
         self.gen_s = time.perf_counter() - t
-        t = time.perf_counter()
-        self.expected = self.oracle.term_stats(
-            {"seed": seed, "sizes": sizes}, self.batches
+        self._expected = in_background(
+            self.oracle.term_stats, {"seed": seed, "sizes": sizes}, self.batches
         )
-        self.oracle_s = time.perf_counter() - t
 
     def _op(self, i: int, out: str) -> float:
         from lucene_spark.index import build_index
@@ -89,95 +105,97 @@ class Ingest:
         return time.perf_counter() - t0
 
     def _verify(self, i: int, out: str, res: Result) -> tuple[int, int]:
-        """Doc count and every term's (df, ttf) of the merged tier against the
-        oracle. Returns (on-disk bytes, term rows)."""
-        from pyspark.sql import functions as F
-
+        """Doc count and every term's (df, ttf), summed over the merged tier's
+        segments, against the oracle. Returns (on-disk bytes, term rows)."""
         from lucene_spark.index import IndexReader
 
         with self.tracer.span("index.reader.open"):
             reader = IndexReader(self.spark, f"{out}/tier")
             n_docs = reader.global_stats[0]
-        rows = (
-            reader.term_dict.groupBy("term")
-            .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
-            .collect()
-        )
-        got = {r["term"]: [int(r["df"]), int(r["ttf"])] for r in rows}
+        rows = reader.term_dict.select("term", "df", "ttf").collect()
+        got: dict[str, list[int]] = {}
+        for r in rows:
+            df_ttf = got.setdefault(r["term"], [0, 0])
+            df_ttf[0] += int(r["df"])
+            df_ttf[1] += int(r["ttf"])
         want = self.expected[i]
         ok = n_docs == len(self.batches[i]) and got == want
         res.check(ok, f"ingest batch {i}: docs {n_docs}/{len(self.batches[i])}, "
                       f"terms {len(got)}/{len(want)}, equal={got == want}")
-        term_rows = reader.term_dict.count()
+        term_rows = len(rows)
         size = dir_bytes(f"{out}/tier")
         shutil.rmtree(out, ignore_errors=True)
         return size, term_rows
 
-    def run(self, work: str, seconds: float, res: Result, loops: int = 1) -> None:
+    def run(self, work: str, cap_s: float, res: Result) -> None:
         c = self.cfg
         self.dfs = {}
-        setup = []
-        for i in range(c.setup_reps):
-            setup.append(self._op(i, f"{work}/setup-{i}"))
-            self._verify(i, f"{work}/setup-{i}", res)
-        res.metrics["setup_s"] = (median(setup), "s")
-        res.summary["setup_reps_s"] = [round(x, 3) for x in setup]
+        self.expected, self.oracle_s = self._expected.result()
+        # the cold op: set-up, not timed
+        cold = self._op(0, f"{work}/setup-0")
+        self._verify(0, f"{work}/setup-0", res)
         res.summary["oracle_s"] = round(self.oracle_s, 3)
         res.mark("setup")
 
-        timed = list(range(c.setup_reps, len(self.batches)))
-        loop_s, traced = [], self.tracer.enabled
+        traced = self.tracer.enabled
         self.tracer.phase = "loop"
-        for rep in range(loops):
-            self.tracer.enabled = traced and rep == 1
-            # the caller checks each op's tier before it starts the next op;
-            # the loop runs until the ops themselves have taken ``seconds``
-            ops, sizes, term_rows = [], [], []
-            t_start = time.perf_counter()
-            with RssSampler(exclude=self.pool._processes) as rss:
-                while not ops or sum(x for x in ops if x == x) < seconds:
-                    i = timed[len(ops) % len(timed)]
-                    out = f"{work}/op-{rep}-{len(ops)}"
-                    try:
-                        ops.append(self._op(i, out))
-                    except Exception as e:  # counted, the loop goes on
-                        ops.append(float("nan"))
-                        res.check(False, f"ingest op raised {e!r}"[:300])
-                        shutil.rmtree(out, ignore_errors=True)
-                        continue
-                    size, rows = self._verify(i, out, res)
-                    sizes.append(size / len(self.batches[i]))
-                    term_rows.append(rows)
-                    if len(ops) >= 4 * len(timed):
-                        break  # keeps a much faster engine inside the run's time limit
-            loop_s.append(time.perf_counter() - t_start)
-            res.mark(f"loop{rep}")
-            if rep == 0:
-                good = [x for x in ops if x == x]
-                if not good:
-                    raise RuntimeError(f"every timed ingest op failed: {res.errors}")
-                res.summary["peak_rss_mb"] = round(rss.peak / 2**20, 1)
-                res.metrics.update(
-                    index_bytes_per_doc=(median(sizes), "B/doc"),
-                    ops_per_s=(c.ingest_docs * len(good) / sum(good), "1/s"),
-                    op_p50_ms=(1000 * median(good), "ms"),
-                )
-                res.summary.update(
-                    ops=len(ops), docs_per_op=c.ingest_docs,
-                    term_rows_per_op=int(median(term_rows)),
-                    tier_bytes_per_op=int(median(s * c.ingest_docs for s in sizes)),
-                    op_s=[round(x, 3) for x in ops],
-                )
-            else:
-                res.summary["traced_op_s"] = [round(x, 3) for x in ops]
+        # a fixed number of ops, whatever their speed; the caller checks each
+        # op's tier before it starts the next op. A failed op counts as one of
+        # them. ``cap_s`` only stops a run that would otherwise overrun its
+        # time limit. A traced run traces every other op, the first one
+        # untraced; the ops between are its untraced baseline.
+        ops, traced_ops, sizes, term_rows = [], [], [], []
+        t_start = time.perf_counter()
+        with RssSampler(exclude=self.pool._processes) as rss:
+            for n in range(c.ingest_ops):
+                if n and time.perf_counter() - t_start > cap_s:
+                    res.check(False, f"ingest: safety stop after {n} ops")
+                    break
+                i = 1 + n
+                out = f"{work}/op-{n}"
+                self.tracer.enabled = traced and n % 2 == 1
+                try:
+                    dt = self._op(i, out)
+                except Exception as e:  # counted, the loop goes on
+                    res.check(False, f"ingest op raised {e!r}"[:300])
+                    shutil.rmtree(out, ignore_errors=True)
+                    continue
+                (traced_ops if self.tracer.enabled else ops).append(dt)
+                size, rows = self._verify(i, out, res)
+                sizes.append(size / len(self.batches[i]))
+                term_rows.append(rows)
         self.tracer.enabled = traced
-        res.summary["loop_s"] = [round(x, 3) for x in loop_s]
+        res.summary["loop_s"] = round(time.perf_counter() - t_start, 3)
+        res.mark("loop")
+        if not ops:
+            return  # every op failed; counted, no figures
+        # an ingest op is its own set-up: the set-up figure is the median of
+        # the cold op and the first warm one
+        setup = [cold, ops[0]]
+        res.summary["peak_rss_mb"] = round(rss.peak / 2**20, 1)
+        res.metrics.update(
+            setup_s=(median(setup), "s"),
+            index_bytes_per_doc=(median(sizes), "B/doc"),
+            ops_per_s=(c.ingest_docs * len(ops) / sum(ops), "1/s"),
+            op_p50_ms=(1000 * median(ops), "ms"),
+        )
+        res.summary.update(
+            ops=len(ops) + len(traced_ops), docs_per_op=c.ingest_docs,
+            term_rows_per_op=int(median(term_rows)),
+            tier_bytes_per_op=int(median(s * c.ingest_docs for s in sizes)),
+            setup_reps_s=[round(x, 3) for x in setup],
+            op_s=[round(x, 3) for x in ops],
+            traced_op_s=[round(x, 3) for x in traced_ops],
+        )
 
 
 # --- search -------------------------------------------------------------
 
 class Search:
-    SINGLES_PER_CYCLE = 12
+    SINGLES_PER_CYCLE = 2
+    CYCLES = 4  # 8 singles and 4 batch calls
+    # the singles walk every third shape, 2, 5, ..., 23, which hold every class
+    FIRST_SHAPE, SHAPE_STRIDE = 2, 3
 
     def __init__(self, cfg, spark, tracer: Tracer, oracle: Oracle, pool):
         self.cfg, self.spark, self.tracer, self.oracle, self.pool = cfg, spark, tracer, oracle, pool
@@ -187,25 +205,39 @@ class Search:
         self.seed = seed
         t = time.perf_counter()
         (self.docs,) = generate(self.pool, seed, [c.search_docs])
-        self.queries = query_set(seed, c.variants)
+        self.queries = query_set(seed, c.variants, rare_terms_in(self.docs))
         self.gen_s = time.perf_counter() - t
         n_shapes = len(self.queries) // c.variants
         # round j walks every shape once, on variant j mod variants
         self.rounds = [
             self.queries[v * n_shapes : (v + 1) * n_shapes] for v in range(c.variants)
         ]
+        # the oracle runs while the session starts, on its own docids; its
+        # hits are ranked on the engine's docids once the loop has ended
+        self._expected = in_background(
+            self.oracle.answers,
+            {"seed": seed, "docs_n": len(self.docs), "variants": c.variants},
+            self.docs, [(qid, qs) for qid, _, qs in self.queries], K,
+        )
 
     def _build(self, path: str):
         from lucene_spark.index import build_index
+        from lucene_spark.index.merge import merge_segments
         from lucene_spark.search import Searcher
 
         tr = self.tracer
         with tr.span("search.setup", jobs=False):
+            # the way an ingest op writes a tier: 2*nproc segments, merged to 2
             with tr.span("index.builder") as s:
                 build_index(
-                    self.spark, self.df, path, num_segments=2, stopwords=STOP,
+                    self.spark, self.df, f"{path}-segments",
+                    num_segments=2 * self.cfg.nproc, stopwords=STOP,
                 )
+            s["bytes_written"] = dir_bytes(f"{path}-segments") if tr.enabled else 0
+            with tr.span("index.merge") as s:
+                merge_segments(self.spark, f"{path}-segments", path, target_segments=2)
             s["bytes_written"] = dir_bytes(path) if tr.enabled else 0
+            shutil.rmtree(f"{path}-segments", ignore_errors=True)
             # one searcher per call kind: a batch call must not fill the
             # term-statistics cache the single searches would otherwise miss
             with tr.span("index.reader.open"):
@@ -213,8 +245,10 @@ class Search:
             with tr.span("index.reader.open"):
                 self.single_searcher = Searcher(self.spark, path, stopwords=STOP)
 
-    def _expected(self, path: str) -> None:
-        """Oracle answers on the engine's global docids."""
+    def _rank_expected(self, path: str, by_url: dict) -> None:
+        """The oracle's hits on the engine's global docids, top ``K`` by
+        (score desc, docid asc), the order the engine breaks ties in; also
+        the tier's work counts. Runs after the loop."""
         from pyspark.sql import functions as F
 
         from lucene_spark.index import IndexReader
@@ -225,13 +259,10 @@ class Search:
             r["url"]: int(r["docid"]) + int(bases[int(r["segment_id"])])
             for r in reader.docmap.select("segment_id", "docid", "url").collect()
         }
-        docs = sorted((url_docid[u], text) for u, text in self.docs)
-        t = time.perf_counter()
-        self.expected = self.oracle.answers(
-            {"seed": self.seed, "docs_n": len(docs), "variants": self.cfg.variants},
-            docs, [(qid, qs) for qid, _, qs in self.queries], K,
-        )
-        self.oracle_s = time.perf_counter() - t
+        self.expected = {
+            qid: sorted(([url_docid[u], s] for u, s in hits), key=lambda h: (-h[1], h[0]))[:K]
+            for qid, hits in by_url.items()
+        }
         self.term_rows = reader.term_dict.count()
         self.postings_bytes = int(
             reader.postings.select(
@@ -242,6 +273,11 @@ class Search:
 
     def _single(self, qid: str, qs: str, cls: str):
         tr = self.tracer
+        # every single pays its term-statistics job: which terms an earlier
+        # call has already looked up depends on the seed
+        stats = getattr(self.single_searcher, "_term_stats_cache", None)
+        if isinstance(stats, dict):
+            stats.clear()
         t0 = time.perf_counter()
         with tr.span("search.single", jobs=False, cls=cls):
             with tr.span("search.searcher.plan", kind="single", cls=cls):
@@ -251,12 +287,14 @@ class Search:
         dt = time.perf_counter() - t0
         return dt, [(int(r["docid"]), float(r["score"])) for r in rows]
 
-    def _batch(self):
+    def _batch(self, queries=None):
         tr = self.tracer
         t0 = time.perf_counter()
         with tr.span("search.batch", jobs=False):
             with tr.span("search.searcher.plan", kind="batch"):
-                df = self.batch_searcher.search_many({q: s for q, _, s in self.queries}, k=K)
+                df = self.batch_searcher.search_many(
+                    {q: s for q, _, s in queries or self.queries}, k=K
+                )
             with tr.span("search.searcher.exec", kind="batch"):
                 rows = df.collect()
         dt = time.perf_counter() - t0
@@ -273,35 +311,41 @@ class Search:
             np.float32(g) == np.float32(w) for (_, g), (_, w) in zip(got, want)
         )
 
-    def _loop(self, seconds: float, start_round: int):
-        """Timed closed loop: 12 singles, then a batch call, until ``seconds``
-        have passed and the singles end on a whole round (at least one)."""
+    def _loop(self, cap_s: float, res: Result):
+        """Timed closed loop of a fixed number of cycles, each 2 singles
+        walking round 1's shapes from ``FIRST_SHAPE`` by ``SHAPE_STRIDE``
+        and then one batch call. A failed call counts as one of them; ``cap_s`` only stops
+        a run that would otherwise overrun its time limit. A traced run
+        traces every single and every other batch call; the batch calls
+        between are its untraced baseline. Returns (singles, batches,
+        outcomes), the first two as (seconds, traced) pairs."""
         singles, batches, outcomes = [], [], []
         n_shapes = len(self.rounds[0])
+        traced = self.tracer.enabled
         t_start = time.perf_counter()
-        while (
-            not singles
-            or len(singles) % n_shapes
-            or time.perf_counter() - t_start < seconds
-        ):
-            for _ in range(self.SINGLES_PER_CYCLE):
-                j = len(singles)
-                qid, cls, qs = self.rounds[(start_round + j // n_shapes) % len(self.rounds)][j % n_shapes]
+        for n in range(self.CYCLES):
+            if n and time.perf_counter() - t_start > cap_s:
+                res.check(False, f"search: safety stop after {n} cycles")
+                break
+            for j in range(n * self.SINGLES_PER_CYCLE, (n + 1) * self.SINGLES_PER_CYCLE):
+                k = self.FIRST_SHAPE + self.SHAPE_STRIDE * j
+                qid, cls, qs = self.rounds[(1 + k // n_shapes) % len(self.rounds)][k % n_shapes]
                 try:
                     dt, got = self._single(qid, qs, cls)
-                    singles.append((cls, dt))
+                    singles.append((dt, self.tracer.enabled))
                     outcomes.append((qid, got))
                 except Exception as e:
-                    singles.append((cls, float("nan")))
                     outcomes.append(("error", repr(e)))
+            self.tracer.enabled = traced and n % 2 == 1
             try:
                 dt, got = self._batch()
-                batches.append(dt)
+                batches.append((dt, self.tracer.enabled))
                 outcomes.append(("batch", got))
             except Exception as e:
-                batches.append(float("nan"))
                 outcomes.append(("error", repr(e)))
-        return time.perf_counter() - t_start, singles, batches, outcomes
+            self.tracer.enabled = traced
+        res.summary["loop_s"] = round(time.perf_counter() - t_start, 3)
+        return singles, batches, outcomes
 
     def _score(self, outcomes, res: Result) -> None:
         for what, got in outcomes:
@@ -313,11 +357,12 @@ class Search:
             else:
                 res.check(self._same(what, got), f"single {what}: {got[:3]} vs {self.expected[what][:3]}")
 
-    def run(self, work: str, seconds: float, res: Result, loops: int = 1) -> None:
-        c = self.cfg
+    def run(self, work: str, cap_s: float, res: Result) -> None:
+        by_url, oracle_s = self._expected.result()
+        res.summary["oracle_s"] = round(oracle_s, 3)
         self.df = _docs_df(self.spark, self.docs)
         setup = []
-        for i in range(c.setup_reps):
+        for i in range(SETUP_REPS):
             path = f"{work}/index-{i}"
             t = time.perf_counter()
             self._build(path)
@@ -328,52 +373,57 @@ class Search:
         res.summary["setup_reps_s"] = [round(x, 3) for x in setup]
 
         res.mark("setup")
-        self._expected(path)
-        res.summary["oracle_s"] = round(self.oracle_s, 3)
-        res.mark("oracle")
-        # warm-up: one batch call, then every other shape of round 0, which
-        # covers every shape class
-        self._batch()
+        # warm-up: one batch call, then the first shape of each shape class
+        # in round 0
+        res.summary["warmup_batch_s"] = round(self._batch()[0], 3)
+        firsts = {cls: (qid, qs) for qid, cls, qs in reversed(self.rounds[0])}
         res.summary["warmup_singles_s"] = [
-            round(self._single(qid, qs, cls)[0], 3)
-            for qid, cls, qs in self.rounds[0][1::2][: c.warmup_singles]
+            round(self._single(qid, qs, cls)[0], 3) for cls, (qid, qs) in firsts.items()
         ]
         res.mark("warmup")
 
-        loop_s, traced = [], self.tracer.enabled
         self.tracer.phase = "loop"
-        for rep in range(loops):
-            self.tracer.enabled = traced and rep == 1
-            with RssSampler(exclude=self.pool._processes) as rss:
-                elapsed, singles, batches, outcomes = self._loop(seconds, start_round=1)
-            loop_s.append(elapsed)
-            res.mark(f"loop{rep}")
-            self._score(outcomes, res)
-            res.mark(f"checked{rep}")
-            if rep:
-                res.summary["traced_single_s"] = [round(dt, 3) for _, dt in singles]
-                continue
-            lat = [dt for _, dt in singles if dt == dt]
-            good_b = [dt for dt in batches if dt == dt]
-            if not lat or not good_b:
-                raise RuntimeError(f"every timed search of a kind failed: {res.errors}")
-            res.summary["peak_rss_mb"] = round(rss.peak / 2**20, 1)
-            res.metrics.update(
-                index_bytes_per_doc=(dir_bytes(path) / len(self.docs), "B/doc"),
-                ops_per_s=(len(self.queries) * len(good_b) / sum(good_b), "1/s"),
-                op_p50_ms=(1000 * median(lat), "ms"),
-            )
-            per_class = {k: 0 for k in SHAPE_CLASSES}
-            for _, cls, _ in self.rounds[0]:
-                per_class[cls] += 1
-            res.summary.update(
-                docs=len(self.docs), term_rows=self.term_rows,
-                postings_bytes=self.postings_bytes,
-                batch_calls=len(batches), queries_per_batch=len(self.queries),
-                singles=len(singles),
-                shapes_per_class=per_class,
-                batch_s=[round(x, 3) for x in batches],
-                single_s=[round(dt, 3) for _, dt in singles],
-            )
-        self.tracer.enabled = traced
-        res.summary["loop_s"] = [round(x, 3) for x in loop_s]
+        with RssSampler(exclude=self.pool._processes) as rss:
+            singles, batches, outcomes = self._loop(cap_s, res)
+        res.mark("loop")
+        self._rank_expected(path, by_url)
+        self._score(outcomes, res)
+        res.mark("checked")
+        lat = [dt for dt, traced in singles if not traced]
+        batch_s = [dt for dt, traced in batches if not traced]
+        if self.tracer.enabled:
+            # the per-call constant of a batch call: one round of shapes
+            # (24 queries) against the full set's queries
+            self.tracer.enabled = False
+            res.summary["batch_one_round_s"] = [
+                round(self._batch(self.rounds[0])[0], 3) for _ in range(3)
+            ]
+            self.tracer.enabled = True
+        if not batch_s or not (lat or self.tracer.enabled):
+            return  # every call of a kind failed; counted, no figures
+        res.summary["peak_rss_mb"] = round(rss.peak / 2**20, 1)
+        res.metrics.update(
+            index_bytes_per_doc=(dir_bytes(path) / len(self.docs), "B/doc"),
+            ops_per_s=(len(self.queries) * len(batch_s) / sum(batch_s), "1/s"),
+            op_p50_ms=(1000 * median(lat), "ms"),
+        )
+        n_shapes = len(self.rounds[0])
+        singles_per_class = {k: 0 for k in SHAPE_CLASSES}
+        for j in range(self.CYCLES * self.SINGLES_PER_CYCLE):
+            k = self.FIRST_SHAPE + self.SHAPE_STRIDE * j
+            singles_per_class[self.rounds[0][k % n_shapes][1]] += 1
+        batch_per_class = {k: 0 for k in SHAPE_CLASSES}
+        for _, cls, _ in self.queries:
+            batch_per_class[cls] += 1
+        res.summary.update(
+            docs=len(self.docs), term_rows=self.term_rows,
+            postings_bytes=self.postings_bytes,
+            batch_calls=len(batches), queries_per_batch=len(self.queries),
+            singles=len(singles),
+            singles_per_class=singles_per_class,
+            batch_queries_per_class=batch_per_class,
+            batch_s=[round(x, 3) for x in batch_s],
+            single_s=[round(x, 3) for x in lat],
+            traced_single_s=[round(dt, 3) for dt, traced in singles if traced],
+            traced_batch_s=[round(dt, 3) for dt, traced in batches if traced],
+        )
